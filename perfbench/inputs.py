@@ -26,15 +26,14 @@ from eel_sdk_spark import corpus
 WEBTEXT_DDL = corpus.SCHEMA_DDL
 WEBTEXT_COLS = ["url", "warc_ts", "html", "text", "lang"]
 
-# The documents/embeddings shapes the repository's corpus queries read
-# (see __spark_entry__.queries): a 30-word vocabulary, 10..100 tokens a
-# document, ~5% near-duplicates (an earlier document's text + " dup"),
-# 20 round-robin sources and 64-d float embeddings with 10 labels.
+# The documents shape the repository's corpus queries read (see
+# __spark_entry__.queries): a 30-word vocabulary, 10..100 tokens a
+# document, ~5% near-duplicates (an earlier document's text + " dup")
+# and 20 round-robin sources.
 VOCAB = ("spark window merge table column vector stream value data small "
          "join filter big group hash customer sort order slow line part "
          "fast row the agg key query a scan batch").split()
 LANGS = ["en", "en", "en", "zh", "es", "fr", "de"]
-EMB_DIM = 64
 
 
 def id_base(seed: int) -> int:
@@ -96,19 +95,6 @@ def documents(seed: int, n: int) -> pa.Table:
         "lang": pa.array(langs, pa.string()),
         "source": pa.array([f"src{i % 20}" for i in range(n)], pa.string()),
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-    })
-
-
-def embeddings(seed: int, n: int) -> pa.Table:
-    rng = np.random.default_rng([int(seed), 2])
-    emb = rng.normal(0.0, 0.125, (n, EMB_DIM)).astype(np.float32)
-    flat = pa.array(emb.reshape(-1), pa.float32())
-    offsets = pa.array(np.arange(0, (n + 1) * EMB_DIM, EMB_DIM,
-                                 dtype=np.int32))
-    return pa.table({
-        "vec_id": pa.array(np.arange(n), pa.int64()),
-        "embedding": pa.ListArray.from_arrays(offsets, flat),
-        "label": pa.array(rng.integers(0, 10, n).astype(np.int32), pa.int32()),
     })
 
 

@@ -52,16 +52,15 @@ def mismatch(spark_pd, duck_pd) -> str | None:
 
 
 class Oracle:
-    """A DuckDB connection with ``documents`` and ``embeddings`` views
-    over the workload's generated parquet directory."""
+    """A DuckDB connection with a ``documents`` view over the workload's
+    generated parquet directory."""
 
     def __init__(self, sf_dir: str):
         import duckdb
 
         self._con = duckdb.connect()
-        for t in ("documents", "embeddings"):
-            self._con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                          f"'{sf_dir}/{t}.parquet'")
+        self._con.sql("CREATE VIEW documents AS SELECT * FROM "
+                      f"'{sf_dir}/documents.parquet'")
 
     def check(self, sql: str, spark_pd) -> str | None:
         return mismatch(spark_pd, self._con.sql(sql).df())

@@ -2,29 +2,38 @@
 """Benchmark runner for eel_sdk_spark.
 
     python3 perfbench/run.py --workload bulk_roundtrip --seed 1 \\
-        --seconds 16 --trace 0
+        --seconds 12 --trace 0
     python3 perfbench/run.py --workload all --seed 1   # every workload
     python3 perfbench/run.py --selftest
 
 Runs one workload at ``local[<cores>]`` from a single driver process, as
 a closed loop with one client: the next operation starts when the
-previous one returns. Inputs come from ``--seed`` only. Every
-operation's output is checked; the last line of stdout is one JSON
-object ``{"correct", "attempted", "failed", "metrics"}`` holding the
-end-to-end metrics (``--trace 0``) or the per-layer metrics
-(``--trace 1``). The lines before it print the same run figure by
+previous one returns. The loop runs whole rounds, each kind once a
+round, as many as fit ``--seconds`` at the workload's measured round
+time, so every run does the same work. Inputs come from ``--seed``
+only. Every operation's output is checked; the last line of stdout is
+one JSON object ``{"correct", "attempted", "failed", "metrics"}``
+holding the end-to-end metrics (``--trace 0``) or the per-layer
+metrics (``--trace 1``). The lines before it print the same run figure by
 figure, with units, including the per-operation and per-codec detail.
 
 End-to-end metrics, on every workload:
 
-- ``setup_s``: session start, plus the median of three input-and-table
-  builds, plus one warm pass of every operation kind.
+- ``setup_s``: ``TreeCpu`` seconds (see ``op_cpu_s``) of session
+  start, plus the median of three input-and-table builds, plus one warm
+  pass of every operation kind. Computing the expected results and
+  checking the warm pass's outputs are left out. The wall-time twin
+  ``setup_wall_s`` is printed but not gated: a host steal episode
+  (15-22% steal) raised its median over ten runs by 25%, and the CPU
+  figures by 10%.
 - ``op_cpu_s``: geometric mean over the workload's operation kinds of
-  each kind's median CPU time per operation, summed over all cores
-  (``/proc/stat`` busy time: idle, I/O wait and steal excluded). The
-  wall-time twin ``op_p50_s`` is printed but not gated: on a shared
-  4-vCPU VM, host CPU steal of 0.5-26% moved it by up to 80% between
-  runs, and CPU time by under 20%.
+  each kind's median CPU time per operation: user plus system time of
+  the benchmark's own process tree (driver, Spark JVM, Python workers),
+  read from ``/proc/<pid>/stat``, less the JVM's JIT compiler threads
+  (see ``TreeCpu``). The wall-time twin ``op_p50_s`` is printed but
+  not gated: on a shared VM, host CPU steal moves it far more than
+  CPU time. The gate is therefore blind to latency changes
+  that leave CPU time alone (less idle waiting, more parallelism).
 - ``stored_ratio``: committed eel data-file bytes over raw bytes of the
   workload's table as set up.
 
@@ -32,8 +41,8 @@ Per-layer metrics (``--trace 1``, same names on every workload):
 ``op.*`` is the mean over the workload's operation kinds of each kind's
 median Spark jobs, DataFrame-build time, driver self time (wall minus
 the union of its job intervals), executor run and CPU time and shuffle
-MB, read per job group from the status store, and ``cpu_s``, the CPU
-time all cores spent during the operation; the ``<kind>.*`` lines
+MB, read per job group from the status store, and ``cpu_s``, the
+operation's ``TreeCpu`` seconds; the ``<kind>.*`` lines
 before the JSON give each kind. ``codecs``, ``selector``, ``channel``,
 ``table``, ``checkpoint`` and ``datasource`` come from
 ``layers.probe_layers``; ``trace.op_p50_s`` and ``trace.op_cpu_s`` are
@@ -66,7 +75,7 @@ def parse_args(argv):
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--workload")
     p.add_argument("--seed", type=int, default=0)
-    p.add_argument("--seconds", type=float, default=16)
+    p.add_argument("--seconds", type=float, default=12)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--selftest", action="store_true")
     a = p.parse_args(argv)
@@ -112,7 +121,8 @@ def prepare_env(work: Path) -> int:
             "--conf spark.ui.retainedStages=100000",
             "--driver-java-options " + shlex.quote(
                 f"-Djava.io.tmpdir={work / 'tmp'} "
-                f"-Dderby.system.home={work} -XX:-UsePerfData"),
+                f"-Dderby.system.home={work} -XX:-UsePerfData "
+                "-XX:-UseDynamicNumberOfCompilerThreads"),
             "pyspark-shell"]),
     })
     time.tzset()
@@ -152,34 +162,90 @@ def stop_spark(spark) -> None:
 
 def cpu_times() -> list[int]:
     """Aggregate /proc/stat jiffies: user nice system idle iowait irq
-    softirq steal ..."""
+    softirq steal ... (machine-wide; only reported, never gated)."""
     with open("/proc/stat") as f:
         return [int(x) for x in f.readline().split()[1:]]
 
 
 CLK_TCK = os.sysconf("SC_CLK_TCK")
-BUSY, STEAL = (0, 1, 2, 5, 6), 7  # user nice system irq softirq; steal
+STEAL = 7
 
 
-def busy_s(jiffies) -> float:
-    """CPU seconds spent running code, summed over cores: excludes idle,
-    I/O wait and steal (time the host ran someone else on our cores)."""
-    return sum(jiffies[i] for i in BUSY) / CLK_TCK
+def _stat(path: str) -> list[str]:
+    with open(path) as f:
+        # the command name may hold spaces: split after it
+        return f.read().rsplit(")", 1)[1].split()
+
+
+class TreeCpu:
+    """CPU seconds (user + system) of this process and every descendant:
+    the driver, the Spark JVM it launched and the JVM's Python workers.
+    Reaped children count through their parent's cutime/cstime, so a
+    worker that exits mid-operation is not lost. Other processes on the
+    machine are not counted, nor is the JVM's JIT compiler: compiling
+    is warm-up, and it varied by up to 2.6 s per operation between
+    otherwise equal operations."""
+
+    def __init__(self):
+        self._root = os.getpid()
+        self._jit_tids: dict[int, list[str]] = {}
+
+    def _jit_ticks(self, pid: int) -> int:
+        """CPU ticks of a JVM's JIT compiler threads. The session runs
+        with a fixed set of them (-XX:-UseDynamicNumberOfCompilerThreads),
+        so none exits and takes its time out of the per-thread sum."""
+        if pid not in self._jit_tids:
+            tids = []
+            for tid in os.listdir(f"/proc/{pid}/task"):
+                with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                    if "CompilerThre" in f.read():
+                        tids.append(tid)
+            self._jit_tids[pid] = tids
+        return sum(sum(int(x) for x in
+                       _stat(f"/proc/{pid}/task/{t}/stat")[11:13])
+                   for t in self._jit_tids[pid])
+
+    def seconds(self) -> float:
+        parent, cpu = {}, {}
+        for d in os.listdir("/proc"):
+            if not d.isdigit():
+                continue
+            try:
+                rest = _stat(f"/proc/{d}/stat")
+            except (OSError, IndexError):
+                continue  # exited while listing
+            pid = int(d)
+            parent[pid] = int(rest[1])
+            cpu[pid] = sum(int(x) for x in rest[11:15])
+        total = 0
+        for pid, ticks in cpu.items():
+            p = pid
+            while p not in (self._root, 0, 1) and p in parent:
+                p = parent[p]
+            if p != self._root:
+                continue
+            try:
+                java = os.readlink(f"/proc/{pid}/exe").endswith("/java")
+                total += ticks - (self._jit_ticks(pid) if java else 0)
+            except OSError:
+                total += ticks  # exited since the listing
+        return total / CLK_TCK
 
 
 class Recorder:
     """Runs one operation under its own job group and records it."""
 
-    def __init__(self, spark, clock=None):
+    def __init__(self, spark, cpu: TreeCpu, clock=None):
         self._sc = spark.sparkContext
         self._clock = clock
+        self._cpu = cpu
         self.ops: list[dict] = []
         self.timed = False
 
     def __call__(self, kind, fn) -> None:
         group = f"perfbench-{len(self.ops)}-{kind}"
         self._sc.setJobGroup(group, kind, False)
-        cpu0 = cpu_times()
+        cpu0 = self._cpu.seconds()
         start = time.time()
         t0 = time.perf_counter()
         try:
@@ -188,7 +254,7 @@ class Recorder:
             traceback.print_exc(file=sys.stderr)
             ok, build_s = False, 0.0
         wall = time.perf_counter() - t0
-        cpu = [b - a for a, b in zip(cpu0, cpu_times())]
+        cpu = self._cpu.seconds() - cpu0
         self._sc._jsc.clearJobGroup()
         if self._clock is not None:
             build_s += self._clock.take_build()
@@ -196,7 +262,7 @@ class Recorder:
             print(f"FAILED {kind} (op {len(self.ops)})", file=sys.stderr)
         self.ops.append({"kind": kind, "group": group, "start": start,
                          "end": start + wall, "wall": wall,
-                         "cpu": busy_s(cpu), "steal": cpu[STEAL] / CLK_TCK,
+                         "cpu": cpu,
                          "build_s": build_s, "ok": bool(ok),
                          "timed": self.timed})
 
@@ -232,14 +298,22 @@ def in_workdir(label: str, fn) -> int:
             pass
 
 
+def measured(cpu: TreeCpu, fn) -> tuple[float, float]:
+    """(wall seconds, TreeCpu seconds) of ``fn()``."""
+    c, t = cpu.seconds(), time.perf_counter()
+    fn()
+    return time.perf_counter() - t, cpu.seconds() - c
+
+
 def run_workload(args, work: Path, cpus: int) -> int:
     load_before, cpu_before = os.getloadavg()[0], cpu_times()
-    t0 = time.perf_counter()
+    cpu = TreeCpu()
+    c0, t0 = cpu.seconds(), time.perf_counter()
     spark = start_spark(cpus)
     try:
         from perfbench.workloads import WORKLOADS
 
-        session_s = time.perf_counter() - t0
+        session = time.perf_counter() - t0, cpu.seconds() - c0
         clock = None
         if args.trace:
             from perfbench.layers import CallClock
@@ -248,17 +322,16 @@ def run_workload(args, work: Path, cpus: int) -> int:
             clock.install()
         wl = WORKLOADS[args.workload](spark, args.seed, str(work / "data"),
                                       cpus)
-        rec = Recorder(spark, clock)
+        rec = Recorder(spark, cpu, clock)
 
-        builds = []
-        for _ in range(3):
-            t = time.perf_counter()
-            wl.build()
-            builds.append(time.perf_counter() - t)
-        t = time.perf_counter()
-        wl.warm(rec)
-        warm_s = time.perf_counter() - t
-        setup_s = session_s + statistics.median(builds) + warm_s
+        builds = [measured(cpu, wl.build) for _ in range(3)]
+        ref_s = measured(cpu, wl.reference)[0]
+        warm = measured(cpu, lambda: wl.warm(rec))
+        # the warm pass may check outputs; the checks are not set-up work
+        warm = warm[0] - wl.check_s, warm[1] - wl.check_cpu_s
+        setup_wall_s, setup_s = (
+            session[i] + statistics.median(b[i] for b in builds) + warm[i]
+            for i in (0, 1))
         # measured on the set-up table, so it does not depend on how
         # many appends the timed loop fits in
         stored = wl.stored_ratio()
@@ -266,15 +339,15 @@ def run_workload(args, work: Path, cpus: int) -> int:
             clock.reset()
 
         rec.timed = True
-        deadline = time.perf_counter() + args.seconds
-        kinds_seen: set = set()
+        # a fixed number of whole rounds (a round runs every kind once):
+        # the same work, and the same samples per kind, in every run
+        rounds = math.ceil(args.seconds / wl.round_s)
         loop_t0 = time.perf_counter()
-        while (time.perf_counter() < deadline
-               or kinds_seen != set(wl.kinds)):
-            kind, fn = wl.next_op()
-            rec(kind, fn)
-            kinds_seen.add(kind)
+        for _ in range(rounds * len(wl.kinds)):
+            rec(*wl.next_op())
         loop_s = time.perf_counter() - loop_t0
+        rec.timed = False
+        wl.final_check(rec)
 
         timed = [o for o in rec.ops if o["timed"]]
         walls = {k: [o["wall"] for o in timed if o["kind"] == k and o["ok"]]
@@ -295,7 +368,7 @@ def run_workload(args, work: Path, cpus: int) -> int:
         print(f"workload {args.workload} seed {args.seed} cores {cpus} "
               f"master local[{cpus}] driver_mem {os.environ['EEL_DRIVER_MEM']}"
               f" seconds {args.seconds} trace {args.trace}")
-        print(f"timed loop {loop_s:.3f} s, {len(timed)} ops, "
+        print(f"timed loop {loop_s:.3f} s, {rounds} rounds, {len(timed)} ops, "
               f"{attempted} attempted in total (warm pass included)")
         for k in wl.kinds:
             xs = walls[k]
@@ -313,12 +386,17 @@ def run_workload(args, work: Path, cpus: int) -> int:
             ("op_cpu_s", op_cpu, "s"),
             ("stored_ratio", stored, "count"),
             ("setup_s", setup_s, "s"),
+            ("setup_wall_s", setup_wall_s, "s"),
             ("fail_ratio", failed / attempted, "count"),
         ]
         for name, v, unit in named:
             print(f"metric {name} {v:.6g} {unit}")
-        print(f"setup session_s {session_s:.3f} builds_s "
-              f"{' '.join('%.3f' % b for b in builds)} warm_s {warm_s:.3f}")
+        for i, unit in ((0, "wall_s"), (1, "cpu_s")):
+            print(f"setup {unit}: session {session[i]:.3f} builds "
+                  f"{' '.join('%.3f' % b[i] for b in builds)} "
+                  f"warm {warm[i]:.3f}")
+        print(f"not in setup: reference_s {ref_s:.3f} "
+              f"check_s {wl.check_s:.3f}")
 
         if args.trace:
             metrics = trace_metrics(spark, wl, rec, clock, work)

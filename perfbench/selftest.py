@@ -1,8 +1,8 @@
 """Self-tests of the benchmark's own parts (``run.py --selftest``).
 
-1. Inputs: one seed gives an identical corpus, documents, embeddings,
-   probe keys and operation order; two seeds give disjoint url sets, and
-   absent probe keys never collide with table or appended rows.
+1. Inputs: one seed gives an identical corpus, documents, probe keys
+   and operation order; two seeds give disjoint url sets, and absent
+   probe keys never collide with table or appended rows.
 2. Status-store reader: on a tiny encoded table, a point lookup run
    under a job group yields nonzero ``jobs`` and ``executor_run_s``.
 """
@@ -28,8 +28,6 @@ def check_inputs() -> None:
         expect(inputs.webtext(ids).equals(inputs.webtext(ids)), "corpus")
         expect(inputs.documents(seed, 200).equals(
             inputs.documents(seed, 200)), "documents")
-        expect(inputs.embeddings(seed, 50).equals(
-            inputs.embeddings(seed, 50)), "embeddings")
         expect(plan(seed) == plan(seed), "operation plan")
     expect(plan(0) != plan(7), "two seeds give the same plan")
 

@@ -1,15 +1,22 @@
-"""The three benchmark workloads.
+"""The benchmark workloads.
 
 Each workload owns its inputs and tables under a private work directory
 and exposes the same shape to the runner:
 
 - ``build()``: generate the seeded inputs and build the tables. The
   runner calls it several times and reports the median as set-up work.
+- ``reference()``: compute what the checks compare against, once, after
+  the last build and outside the set-up timing.
 - ``warm()``: one pass of every operation kind, before timing.
+- ``round_s``: the wall time of one round (every kind once), as
+  measured at ``local[4]`` on a shared 4-vCPU VM; a run does
+  ``ceil(seconds / round_s)`` rounds.
 - ``next_op()``: the next ``(kind, fn)`` of the closed loop; ``fn()``
   runs one operation, checks its output and returns ``(ok, build_s)``,
   where ``build_s`` is the time of the public call that returned the
   DataFrame the operation then executes.
+- ``final_check(run)``: checks made once after the timed loop, counted
+  as operations but not timed.
 - ``table()``: the eel table and probe keys the per-layer probes use.
 - ``stored_ratio()`` and ``named(medians)``: the figures the runner
   prints.
@@ -40,20 +47,25 @@ FIXED_WIDTH = {"boolean": 1, "byte": 1, "short": 2, "integer": 4, "date": 4,
                "float": 4, "long": 8, "double": 8, "timestamp": 8}
 
 
+def _row_hash(cols):
+    # 32-bit masked row hashes keep the sums clear of ANSI long overflow
+    return F.xxhash64(*[F.col(c) for c in cols]).bitwiseAND(
+        F.lit(0xFFFFFFFF))
+
+
 def content_agg(df, cols):
     """(rows, order-independent hash) over every listed column — the
-    sink that materialises each column of a scan. 32-bit masked row
-    hashes keep the sum clear of ANSI long overflow."""
-    h = F.xxhash64(*[F.col(c) for c in cols]).bitwiseAND(F.lit(0xFFFFFFFF))
+    sink that materialises each column of a scan."""
     r = df.select(F.count(F.lit(1)).alias("n"),
-                  F.coalesce(F.sum(h), F.lit(0)).alias("h")).first()
+                  F.coalesce(F.sum(_row_hash(cols)), F.lit(0)).alias("h")
+                  ).first()
     return int(r["n"]), int(r["h"])
 
 
-def raw_bytes(df) -> int:
-    """Uncompressed payload bytes of ``df``: UTF-8 bytes of strings,
-    bytes of binaries, the fixed width of everything else; nulls count
-    zero. One aggregation job."""
+def raw_bytes_col(df):
+    """Uncompressed payload bytes of each row of ``df``: UTF-8 bytes of
+    strings, bytes of binaries, the fixed width of everything else;
+    nulls count zero."""
     parts = []
     for f in df.schema.fields:
         c, t = F.col(f.name), f.dataType.typeName()
@@ -67,7 +79,11 @@ def raw_bytes(df) -> int:
     total = parts[0]
     for p in parts[1:]:
         total = total + p
-    return int(df.select(F.sum(total)).first()[0])
+    return total
+
+
+def raw_bytes(df) -> int:
+    return int(df.select(F.sum(raw_bytes_col(df))).first()[0])
 
 
 def _norm(v):
@@ -105,17 +121,26 @@ def noop(df) -> None:
 
 class Workload:
     name = ""
+    # one round of the closed loop runs each kind once
     kinds: tuple = ()
 
     def __init__(self, spark, seed: int, work: str, cpus: int):
         self.spark, self.seed, self.work, self.cpus = spark, seed, work, cpus
         self._builds = 0
+        # wall and CPU time the warm pass spent checking outputs
+        self.check_s = self.check_cpu_s = 0.0
 
     def fresh_dir(self, label: str) -> str:
         self._builds += 1
         d = os.path.join(self.work, f"{label}{self._builds}")
         os.makedirs(d)
         return d
+
+    def reference(self) -> None:
+        pass
+
+    def final_check(self, run) -> None:
+        pass
 
     def warm(self, run) -> None:
         """Run ops until every kind has run once (``run`` is the
@@ -131,31 +156,72 @@ class Workload:
 
 
 class BulkRoundtrip(Workload):
-    """Encode the seeded webtext corpus into a fresh table, then read it
-    back in full and through a selective two-column projection."""
+    """Encode the seeded webtext corpus into a fresh table, read it back
+    in full and through a selective two-column projection, and run the
+    repository's ``text_metrics`` query over seeded documents:
+    executor-side kernels (codecs and ``functions/``) do the work."""
 
     name = "bulk_roundtrip"
-    kinds = ("encode", "scan", "select")
-    ROWS = 40_000
+    QUERIES = ("text_metrics",)
+    kinds = ("encode", "scan", "select") + QUERIES
+    round_s = 6.0
+    # ~300 MB raw. Driver self time stays ~0.5 s an operation at any
+    # size; at 200k rows it is 19% of an encode and 43% of a full scan
+    # (31% and 54% at 40k rows). More rows do not fit the run budget.
+    ROWS = 200_000
+    # text_metrics takes about 1 s warm
+    DOCS = 8_000
     SELECT_LANG = "de"
 
+    def __init__(self, *a):
+        super().__init__(*a)
+        import __spark_entry__ as entry
+
+        self._queries = entry.queries()
+        self._oracles = entry.oracle_sql()
+        self.oracle = None
+        self._checking = False
+
     def build(self) -> None:
+        import pyarrow.parquet as pq
+
         if getattr(self, "src", None) is not None:
             self.src.unpersist(blocking=True)
         self.src = inputs.webtext_df(self.spark, self.seed, 0, self.ROWS,
                                      self.cpus).cache()
-        cols = inputs.WEBTEXT_COLS
-        self.raw_bytes = raw_bytes(self.src)
-        self.expect_all = content_agg(self.src, cols)
-        self.expect_sel = content_agg(self._selective(self.src),
-                                      ["url", "warc_ts"])
+        noop(self.src)  # generate and cache every column
         self.tables: list[str] = []
         self._step = 0
         self.root = self.fresh_dir("bulk")
+        # the corpus queries read <sf>/documents.parquet
+        self.sf = self.fresh_dir("sf")
+        pq.write_table(inputs.documents(self.seed, self.DOCS),
+                       os.path.join(self.sf, "documents.parquet"))
 
-    def _selective(self, df):
-        return (df.filter(F.col("lang") == self.SELECT_LANG)
-                .select("url", "warc_ts"))
+    def reference(self) -> None:
+        """Raw bytes and the expected scan results, in one job."""
+        from .oracle import Oracle
+
+        sel = F.col("lang") == self.SELECT_LANG
+        r = self.src.select(
+            F.sum(raw_bytes_col(self.src)).alias("raw"),
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.sum(_row_hash(inputs.WEBTEXT_COLS)),
+                       F.lit(0)).alias("h"),
+            F.count(F.when(sel, 1)).alias("n_sel"),
+            F.coalesce(F.sum(F.when(sel, _row_hash(["url", "warc_ts"]))),
+                       F.lit(0)).alias("h_sel")).first()
+        self.raw_bytes = int(r["raw"])
+        self.expect_all = int(r["n"]), int(r["h"])
+        self.expect_sel = int(r["n_sel"]), int(r["h_sel"])
+        self.oracle = Oracle(self.sf)
+
+    def warm(self, run) -> None:
+        # the warm pass checks each query against DuckDB; timed passes
+        # only materialise them
+        self._checking = True
+        super().warm(run)
+        self._checking = False
 
     def _encode(self):
         wh = os.path.join(self.root, f"t{self._step}")
@@ -174,11 +240,31 @@ class BulkRoundtrip(Workload):
 
     def _select(self):
         t = time.perf_counter()
-        df = self._selective(
-            self.spark.read.format("eel")
-            .option("columns", "url,warc_ts,lang").load(self.tables[-1]))
+        df = (self.spark.read.format("eel")
+              .option("columns", "url,warc_ts,lang").load(self.tables[-1])
+              .filter(F.col("lang") == self.SELECT_LANG)
+              .select("url", "warc_ts"))
         build = time.perf_counter() - t
         return content_agg(df, ["url", "warc_ts"]) == self.expect_sel, build
+
+    def _query(self, name: str):
+        """Run a corpus query in full: compared with its DuckDB twin on
+        the warm pass, through a ``noop`` sink otherwise."""
+        t = time.perf_counter()
+        df = self._queries[name](self.spark, self.sf)
+        build = time.perf_counter() - t
+        if not self._checking:
+            noop(df)
+            return True, build
+        got = df.toPandas()
+        # DuckDB runs in this process: its threads count in process_time
+        t, c = time.perf_counter(), time.process_time()
+        bad = self.oracle.check(self._oracles[name], got)
+        self.check_s += time.perf_counter() - t
+        self.check_cpu_s += time.process_time() - c
+        if bad:
+            print(f"oracle mismatch in {name}: {bad}", file=sys.stderr)
+        return bad is None, build
 
     def next_op(self):
         kind = self.kinds[self._step % len(self.kinds)]
@@ -189,6 +275,8 @@ class BulkRoundtrip(Workload):
                 shutil.rmtree(old, ignore_errors=True)
             self.tables = self.tables[-1:]
             return kind, lambda: (self._encode(), 0.0)
+        if kind in self.QUERIES:
+            return kind, lambda: self._query(kind)
         return kind, self._scan if kind == "scan" else self._select
 
     def table(self):
@@ -204,7 +292,12 @@ class BulkRoundtrip(Workload):
     def named(self, med):
         return [("encode_mb_s", self.raw_bytes / MB / med["encode"], "MB/s"),
                 ("scan_mb_s", self.raw_bytes / MB / med["scan"], "MB/s"),
-                ("select_scan_s", med["select"], "s")]
+                ("select_scan_s", med["select"], "s")] + [
+                (f"{q}_s", med[q], "s") for q in self.QUERIES]
+
+    def close(self) -> None:
+        if self.oracle is not None:
+            self.oracle.close()
 
 
 class LookupAppend(Workload):
@@ -213,6 +306,12 @@ class LookupAppend(Workload):
 
     name = "lookup_append"
     kinds = inputs.LOOKUP_KINDS
+    # At least three rounds: about one absent key in ten passes the
+    # blooms and costs 4x a plain miss, and a median of three absorbs it.
+    round_s = 5.0
+    # Small on purpose: a probe should plan much and decode little. The
+    # base table has one file per core, and each append adds as many,
+    # so by the end of a run pruning keeps ~1 file of ~20.
     ROWS = 10_000
     BATCH = 200
 
@@ -227,6 +326,7 @@ class LookupAppend(Workload):
             raise RuntimeError(f"base table has {run.get('n_rows')} rows")
         self.plan = inputs.lookup_plan(self.seed, self.ROWS, self.BATCH)
         self.probes: list[str] = []
+        self.batches = 0
 
     def _lookup(self, row_id: int, url: str, hit: bool):
         t = time.perf_counter()
@@ -244,6 +344,7 @@ class LookupAppend(Workload):
         return (rows_match(rows, row_id) if hit else not rows), build
 
     def _append(self, batch: int):
+        self.batches = batch + 1
         start = self.ROWS + batch * self.BATCH
         df = inputs.webtext_df(self.spark, self.seed, start, self.BATCH,
                                self.cpus)
@@ -253,6 +354,19 @@ class LookupAppend(Workload):
         ok = (run.get("n_rows") == self.BATCH
               and table_rows(self.tbl) - before == self.BATCH)
         return ok, 0.0
+
+    def final_check(self, run) -> None:
+        """Read the whole table back and compare it with every row
+        generated for it: catches an append whose data never landed."""
+        def check():
+            want = inputs.webtext_df(self.spark, self.seed, 0,
+                                     self.ROWS + self.batches * self.BATCH,
+                                     self.cpus)
+            got = self.spark.read.format("eel").load(self.wh)
+            cols = inputs.WEBTEXT_COLS
+            return content_agg(got, cols) == content_agg(want, cols), 0.0
+
+        run("verify_table", check)
 
     def next_op(self):
         kind, arg = next(self.plan)
@@ -275,87 +389,4 @@ class LookupAppend(Workload):
         return [(f"{k}_p50_s", med[k], "s") for k in self.kinds]
 
 
-class CorpusOps(Workload):
-    """The repository's corpus queries over seeded documents and
-    embeddings, each executed in full through a ``noop`` sink."""
-
-    name = "corpus_ops"
-    kinds = ("text_metrics", "minhash_pairs", "jaccard_pairs",
-             "semantic_dedup")
-    DOCS = 8_000
-    VECS = 3_000
-
-    def __init__(self, *a):
-        super().__init__(*a)
-        import __spark_entry__ as entry
-
-        self._queries = entry.queries()
-        self._oracles = entry.oracle_sql()
-        self._i = 0
-        self.oracle = None
-
-    def build(self) -> None:
-        import pyarrow.parquet as pq
-
-        self.sf = self.fresh_dir("sf")
-        docs = inputs.documents(self.seed, self.DOCS)
-        pq.write_table(docs, os.path.join(self.sf, "documents.parquet"))
-        pq.write_table(inputs.embeddings(self.seed, self.VECS),
-                       os.path.join(self.sf, "embeddings.parquet"))
-        # the documents also go into an eel table: its stored ratio and
-        # the per-layer probes measure the codecs on tokenised text
-        self.docs = self.spark.read.parquet(
-            os.path.join(self.sf, "documents.parquet"))
-        self.tbl = ManifestTable(os.path.join(self.sf, "eel"), "blocks")
-        run = checkpoint.encode_with_checkpoint(self.spark, self.docs,
-                                                self.tbl, key="doc_id",
-                                                run_id="docs")
-        if run.get("n_rows") != self.DOCS:
-            raise RuntimeError(f"docs table has {run.get('n_rows')} rows")
-        self.raw_bytes = raw_bytes(self.docs)
-
-    def warm(self, run) -> None:
-        from .oracle import Oracle
-
-        self.oracle = Oracle(self.sf)
-        for name in self.kinds:
-            run(name, lambda n=name: self._checked(n))
-
-    def _checked(self, name: str):
-        """Materialise the query's output and compare it with DuckDB."""
-        t = time.perf_counter()
-        df = self._queries[name](self.spark, self.sf)
-        build = time.perf_counter() - t
-        bad = self.oracle.check(self._oracles[name], df.toPandas())
-        if bad:
-            print(f"oracle mismatch in {name}: {bad}", file=sys.stderr)
-        return bad is None, build
-
-    def _timed(self, name: str):
-        t = time.perf_counter()
-        df = self._queries[name](self.spark, self.sf)
-        build = time.perf_counter() - t
-        noop(df)
-        return True, build
-
-    def next_op(self):
-        name = self.kinds[self._i % len(self.kinds)]
-        self._i += 1
-        return name, lambda: self._timed(name)
-
-    def table(self):
-        return self.tbl, "doc_id", [0, 17, self.DOCS - 1,
-                                    self.DOCS + 5], self.docs
-
-    def stored_ratio(self) -> float:
-        return table_bytes(self.tbl) / self.raw_bytes
-
-    def named(self, med):
-        return [(f"{k}_s", med[k], "s") for k in self.kinds]
-
-    def close(self) -> None:
-        if self.oracle is not None:
-            self.oracle.close()
-
-
-WORKLOADS = {w.name: w for w in (BulkRoundtrip, LookupAppend, CorpusOps)}
+WORKLOADS = {w.name: w for w in (BulkRoundtrip, LookupAppend)}
