@@ -53,32 +53,21 @@ def _check_key_type(schema_ddl: str, key: str, value,
 def lookup_files(spark: SparkSession, snap, key_value, key: str,
                  parts: set[int],
                  aliases: set[str] = frozenset()) -> list[str]:
-    """The three file-pruning tiers of a point lookup, in increasing
-    cost order; returns the files whose payloads must be decoded.
+    """The file tiers of a point lookup, run on the driver in increasing
+    cost order; returns the files the decode kernel opens (never empty).
+    Block-group skipping happens afterwards, per file, in the kernel.
 
-    1. Part coverage (manifest, zero I/O): exact per-file part sets.
-       Vacuous on banded tables — hash part ids make every file span
-       all parts.
-    2. Per-file KEY ranges (manifest, zero I/O): effective whenever the
-       INPUT arrived clustered by the key (time-ordered appends,
-       monotonic ids, range-partitioned upstreams — the no-exchange
-       layout preserves input clustering, so each file covers a narrow
-       disjoint slice). On hash-scattered input the ranges overlap and
-       prune nothing. Files without a recorded range are kept.
-    3. Per-block KEY BLOOMS (r6 — the scattered-layout fix): when the
-       manifest tiers left more than a couple of files, ONE narrow
-       columnar scan of the key blocks' bloom words (footers + ~1% of
-       payload bytes — parquet column projection never touches the
-       payloads) answers "may this file hold the exact key" at ~1%
-       false positives, so the payload decode opens ~1 file with NO
-       layout migration (realign_table demoted to optional). Blooms
-       live IN the data files, not the manifest: a per-file bloom
-       scales with VALUE count (1M-row file @10 bits/key = ~1.25 MB —
-       untenable in a JSON manifest at 100k files), and the narrow
-       scan is exactly how parquet/ORC consult their own column
-       blooms. Pre-bloom files read NULL under mergeSchema and are
-       conservatively kept. Reference analogue:
-       eel-orc/.../OrcSink.scala:15-33 (bloomFilterColumns).
+    1. Part coverage (manifest): exact per-file part sets. Vacuous on
+       banded tables, where every file spans all parts.
+    2. Per-file KEY ranges (manifest): prune when the input arrived
+       clustered by the key; files without a range are kept.
+    3. Per-file SUMMARY blooms (manifest), then the bloom INDEX sidecar
+       read with pyarrow under a 256 MB budget
+       (:func:`prune_files_metadata`).
+    4. Only while more than two files survive: the index read by Spark
+       when the pyarrow read did not answer (over budget, unreadable),
+       and one narrow scan of the per-block KEY BLOOMS of the files the
+       index does not cover (payloads untouched; pre-bloom files kept).
     """
     from .encode import key_cols, key_values
 
@@ -128,9 +117,29 @@ def _component_key_ranges(snap, names: set[str]) -> dict[str, dict]:
     return key_ranges
 
 
+def _files_in_range(snap, files: list[str], names: set[str], lo, hi
+                    ) -> list[str]:
+    """Files whose manifest key range for one component (under any of
+    ``names``) overlaps [lo, hi]; files without a range are kept."""
+    ranges = _component_key_ranges(snap, names)
+    fam = "s" if isinstance(lo, str) else "i"
+    return [f for f in files
+            if (r := ranges.get(os.path.basename(f), {}).get(fam)) is None
+            or (r[0] <= hi and lo <= r[1])]
+
+
 def prune_files_metadata(snap, files: list[str], key: str, key_value,
                          aliases: set[str] = frozenset(),
                          keep_floor: bool = True) -> list[str]:
+    """:func:`_metadata_tiers` without the index coverage."""
+    return _metadata_tiers(snap, files, key, key_value, aliases,
+                           keep_floor)[0]
+
+
+def _metadata_tiers(snap, files: list[str], key: str, key_value,
+                    aliases: set[str] = frozenset(),
+                    keep_floor: bool = True
+                    ) -> tuple[list[str], set[str] | None]:
     """The ZERO-I/O, ZERO-Spark pruning tiers for one key component:
     manifest per-file key ranges, then the manifest-resident per-file
     SUMMARY blooms (tier 0). Runs entirely driver-side from snapshot
@@ -140,17 +149,14 @@ def prune_files_metadata(snap, files: list[str], key: str, key_value,
     range/summary are kept. ``keep_floor=True`` keeps one file when
     everything pruned (the Spark decode path can't read an empty
     parquet list); ``False`` allows an empty result — correct when all
-    files carried metadata and all excluded the value."""
+    files carried metadata and all excluded the value.
+
+    Also returns the basenames the bloom index covered (None: index
+    not consulted), so later tiers skip the files it already answered."""
     names = {key} | set(aliases)
-    key_ranges = _component_key_ranges(snap, names)
-    fam = "s" if isinstance(key_value, str) else "i"
-    in_range = []
-    for f in files:
-        rng = key_ranges.get(os.path.basename(f), {}).get(fam)
-        if rng is None or rng[0] <= key_value <= rng[1]:
-            in_range.append(f)
     # empty parquet read is invalid; keep one file (filter drops all)
-    files = in_range or (files[:1] if keep_floor else [])
+    files = (_files_in_range(snap, files, names, key_value, key_value)
+             or (files[:1] if keep_floor else []))
     # tier 0 (r8): manifest-resident per-file SUMMARY blooms — coarse
     # fixed-size blooms the encoder stamped per file (sentinel rows ->
     # _run_record -> snapshot JSON), probed DRIVER-SIDE before ANY file
@@ -196,17 +202,13 @@ def prune_files_metadata(snap, files: list[str], key: str, key_value,
                                  for i in range(SUMMARY_BLOOM_K))):
                     kept0.append(f)
             files = kept0 or (files[:1] if keep_floor else [])
-    # tier 0b (r9): the r7 bloom INDEX sidecar, consulted with pyarrow
-    # — sidecar files are narrow parquet, readable with NO SparkSession,
-    # so the session-less planning contexts (the DataSource's
-    # pushFilters worker) get the PRECISE per-block blooms once the
-    # coarse summaries saturate (~6k keys/file fills a 1 KB summary and
-    # tier 0 stops pruning). Size-gated: the index scales with value
-    # count, and a 100 TB table's index belongs on executors (the
-    # Spark-side consult in _prune_files_one_component), not in one
-    # driver read — above the budget this tier is skipped, never
-    # partial. Files absent from the index (appended after the build,
-    # compaction survivors) stay conservatively kept.
+    # tier 0b (r9): the bloom INDEX sidecar read with pyarrow (no
+    # SparkSession needed), so session-less planning gets the precise
+    # per-block blooms once the summaries saturate (~6k keys/file).
+    # Above the size budget the tier is skipped, never partial, and the
+    # Spark-side consult in _prune_files_one_component takes over.
+    # Files absent from the index stay conservatively kept.
+    covered = None
     if len(files) > (2 if keep_floor else 0):
         v = _bloom_index_verdicts_pyarrow(snap, key_value, names)
         if v is not None:
@@ -215,7 +217,7 @@ def prune_files_metadata(snap, files: list[str], key: str, key_value,
                      if os.path.basename(f) not in covered
                      or os.path.basename(f) in hits] \
                 or (files[:1] if keep_floor else [])
-    return files
+    return files, covered
 
 
 #: driver-side pyarrow index-consult budget: a sidecar bigger than this
@@ -238,7 +240,7 @@ def _bloom_index_verdicts_pyarrow(snap, key_value, names: set[str]):
         return None
     import numpy as _np
 
-    from .encode import BLOOM_K, bloom_probe_seeds
+    from .encode import bloom_hits, bloom_words
 
     cache = getattr(snap, "_bix_cache", None)
     ckey = tuple(idx_files)
@@ -256,29 +258,12 @@ def _bloom_index_verdicts_pyarrow(snap, key_value, names: set[str]):
                 for f in idx_files)
         except Exception:
             return None  # accelerator tier: degrade to coarser tiers
-        arr = t.column("key_bloom").combine_chunks()
-        offsets = arr.offsets.to_numpy().astype(_np.int64)
-        values = arr.values.to_numpy(zero_copy_only=False) \
-            .astype(_np.int64).view(_np.uint64)
-        nulls = _np.asarray(arr.is_null())
         fl = _np.array(t.column("file").to_pylist(), dtype=object)
         uniq, inv = _np.unique(fl, return_inverse=True)
-        cache = (ckey, offsets, values, nulls, uniq, inv)
+        cache = (ckey, bloom_words(t.column("key_bloom")), uniq, inv)
         snap._bix_cache = cache
-    _, offsets, values, nulls, uniq, inv = cache
-    sizes = offsets[1:] - offsets[:-1]
-    m = _np.maximum(sizes * 64, 1)
-    valid = (~nulls) & (sizes > 0)
-    h1, h2 = bloom_probe_seeds(key_value)
-    hit = _np.ones(len(sizes), dtype=bool)
-    for i in range(BLOOM_K if values.size else 0):
-        p = (h1 + i * h2) % m
-        widx = _np.clip(offsets[:-1] + (p >> 6), 0, len(values) - 1)
-        bits = ((values[widx] >> (p & 63).astype(_np.uint64))
-                & _np.uint64(1)).astype(bool)
-        # NULL / empty blooms are conservatively a hit (same semantics
-        # as encode.bloom_may_contain's isNull() branch)
-        hit &= _np.where(valid, bits, True)
+    _, words, uniq, inv = cache
+    hit = bloom_hits(words, key_value)
     agg = _np.zeros(len(uniq), dtype=bool)
     _np.logical_or.at(agg, inv, hit)
     return set(uniq.tolist()), set(uniq[agg].tolist())
@@ -290,30 +275,23 @@ def _prune_files_one_component(spark: SparkSession, snap,
     """Range tier + bloom tiers (index sidecar, per-file narrow scan)
     for one key component over an already part-pruned candidate list."""
     names = {key} | set(aliases)
-    files = prune_files_metadata(snap, files, key, key_value,
-                                 aliases=aliases)
-    if len(files) > 2:
-        keep: set[str] | None = None
-        uncovered = files
+    files, covered = _metadata_tiers(snap, files, key, key_value,
+                                     aliases=aliases)
+    if len(files) <= 2:
+        return files
+    keep: set[str] | None = None
+    if covered is not None:
+        # tier 0b answered: covered survivors are index hits already
+        keep = {os.path.basename(f) for f in files} & covered
+    else:
         idx = snap.properties.get("bloom_index")
         if idx and idx.get("key") in names:
-            # tier 3a (r7): manifest-registered BLOOM INDEX sidecar — the
-            # per-block key blooms copied into a handful of narrow index
-            # files at build_bloom_index time, so the scan opens O(1)
-            # index files instead of one footer per candidate (at 512
-            # files the per-file footer opens were 1.9 s of a 3.0 s
-            # lookup, BENCH.md round-7; at 100k files they are the whole
-            # lookup). Files committed AFTER the index build are absent
-            # from it and fall through to the per-file scan below —
-            # append-safe without invalidation; compaction survivors
-            # likewise rebuild lazily.
+            # tier 3a (r7): the BLOOM INDEX read by Spark, only when
+            # tier 0b did not answer (over budget or unreadable): O(1)
+            # index files instead of one footer per candidate (512
+            # files: 1.9 s of a 3.0 s lookup, BENCH.md round-7)
             from .encode import bloom_may_contain
 
-            # no candidate-set filter pushed into the scan: an IN over
-            # 100k file literals is a bigger plan than the index itself —
-            # the per-file verdicts are tiny (one row per indexed file)
-            # and the intersection happens driver-side
-            want = {os.path.basename(f) for f in files}
             try:
                 verdicts = (spark.read.parquet(*idx["files"])
                             .groupBy("file")
@@ -325,21 +303,22 @@ def _prune_files_one_component(spark: SparkSession, snap,
                 # per-file scan, never fail the lookup — the index is an
                 # accelerator, not a correctness dependency
                 verdicts = []
-            covered = {r["file"] for r in verdicts} & want
-            keep = {r["file"] for r in verdicts if r["hit"]} & want
-            uncovered = [f for f in files
-                         if os.path.basename(f) not in covered]
-        if uncovered:
-            scanned = _bloom_scan_files(spark, uncovered, key, key_value,
-                                        aliases=aliases)
-            if scanned is None:  # pre-bloom table: keep them all
-                keep = ((keep or set())
-                        | {os.path.basename(f) for f in uncovered})
-            else:
-                keep = (keep or set()) | scanned
-        if keep is not None:
-            files = [f for f in files
-                     if os.path.basename(f) in keep] or files[:1]
+            covered = {r["file"] for r in verdicts}
+            keep = {r["file"] for r in verdicts if r["hit"]}
+    # files committed AFTER the index build (appends, compaction
+    # survivors) are absent from it and fall to the per-file scan —
+    # append-safe without invalidation
+    uncovered = [f for f in files
+                 if os.path.basename(f) not in (covered or ())]
+    if uncovered:
+        scanned = _bloom_scan_files(spark, uncovered, key, key_value,
+                                    aliases=aliases)
+        if scanned is None:  # pre-bloom table: keep them all
+            scanned = {os.path.basename(f) for f in uncovered}
+        keep = (keep or set()) | scanned
+    if keep is not None:
+        files = [f for f in files
+                 if os.path.basename(f) in keep] or files[:1]
     return files
 
 
@@ -369,16 +348,6 @@ def _key_aliases(snap, key: str) -> set[str]:
 
     fold = fold_renames(snap.properties.get("column_renames", []))
     return {h for h, c in fold.items() if c == key}
-
-
-def _relabel_blocks(blocks, aliases: set[str], key: str):
-    """Rewrite historical key names to the current one on a blocks
-    DataFrame, so stats/bloom pruning and decode see ONE name."""
-    if not aliases:
-        return blocks
-    return blocks.withColumn(
-        "col", F.when(F.col("col").isin(*aliases), F.lit(key))
-        .otherwise(F.col("col")))
 
 
 def build_bloom_index(spark: SparkSession, tbl: ManifestTable,
@@ -807,23 +776,22 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
                  schema_ddl: str | None = None, key="url",
                  salt_by_value: str | None = None,
                  run_index: int = -1) -> DataFrame:
-    """Key point-lookup against an encoded table: recompute the key's
-    part_id with the SAME hash chain the encoder used (one-row Spark job —
-    the JVM xxhash64 has no Python twin), then decode only that part's
-    blocks. Touches 1/n_parts of the table: the encoded analogue of
-    partition-pruned point reads.
+    """Key point-lookup against an encoded table. Tier order:
 
-    Salted tables (lineage records salt > 1): pass ``salt_by_value`` (the
-    fine-grained value, e.g. the url when key is its domain) to resolve
-    the exact shard; without it, all ``salt`` candidate parts are decoded
-    (salt/n_parts of the table — still pruned).
+    1. Part ids of the key, recomputed with the encoder's hash chain (a
+       one-row Spark job — the JVM xxhash64 has no Python twin), at
+       every historical width of a widened key.
+    2. File tiers on the driver (:func:`lookup_files`).
+    3. Per surviving file, in one zero-shuffle Python task
+       (:func:`_decode_lookup`): block-group skipping on part
+       membership, key min/max and key bloom, then CRC-verified decode
+       of the kept groups, minus tombstoned rows.
 
-    Within the part, block groups are further skipped by the key
-    column's per-block min/max stats. On hash-arrival order the ranges
-    overlap (no skip, no harm); combined with ``encode_df(sort_by=[key])``
-    the ranges are disjoint and a lookup decodes ~one block instead of
-    the whole part."""
-    from .encode import decode_blocks_df, key_cols, key_values
+    The exact equality filter runs last, as a Spark filter. Salted
+    tables: pass ``salt_by_value`` (e.g. the url when key is its domain)
+    to resolve the exact shard; without it all ``salt`` candidate parts
+    are probed."""
+    from .encode import key_cols, key_values
 
     snap = tbl.current()
     if schema_ddl is None:
@@ -897,63 +865,24 @@ def point_lookup(spark: SparkSession, tbl: ManifestTable, key_value,
     parts = {p for i in range(len(exprs)) for p in row[f"p{i}"]}
     files = lookup_files(spark, snap, key_value, key, parts,
                          aliases=aliases)
-    # mergeSchema: a table appended onto across layout generations mixes
-    # files WITH and WITHOUT the banded parts/part_hi columns — without
-    # merging, whichever file Spark samples first dictates the schema and
-    # the other generation's rows silently vanish from the filter below
-    blocks = spark.read.option("mergeSchema", "true").parquet(*files)
-    for c in cols:
-        blocks = _relabel_blocks(blocks, aliases_by_col[c], c)
-    if "parts" in blocks.columns:
-        # exact membership: banded 'local' blocks span a part run, so
-        # anchor equality would miss parts above the anchor. Pre-banding
-        # rows read NULL for parts under the merged schema — normalize to
-        # their single-part membership [part_id] instead of dropping them
-        want = F.array(*[F.lit(p).cast("int") for p in parts])
-        membership = F.coalesce(F.col("parts"),
-                                F.array(F.col("part_id")))
-        blocks = blocks.filter(F.arrays_overlap(membership, want))
-    else:  # pre-banding table layout
-        blocks = blocks.filter(F.col("part_id").isin(*parts))
-    # within the part, skip whole BLOCK GROUPS whose key-column min/max
-    # range excludes the value (block stats ride the blocks table; this
-    # is the same machinery as predicate pushdown, aimed at the key) —
-    # with 64k-row blocks a 10M-row part decodes ~1 block instead of ~160
+    comps = [({c} | aliases_by_col[c], v, v, v) for c, v in zip(cols, vals)]
     from functools import reduce
     from operator import and_
 
-    from .encode import prune_block_groups, prune_block_groups_bloom
-
-    for c, v in zip(cols, vals):
-        if isinstance(v, str):
-            blocks = prune_block_groups(blocks, c, lower_s=v, upper_s=v)
-        elif isinstance(v, int):
-            blocks = prune_block_groups(blocks, c, lower=v, upper=v)
-        # block tier of the same bloom machinery: within surviving files,
-        # drop whole block groups whose key bloom excludes the value (the
-        # finer skip min/max can't provide on scattered layouts)
-        if "key_bloom" in blocks.columns:
-            blocks = prune_block_groups_bloom(blocks, c, v)
-    out = decode_blocks_df(blocks, schema_ddl).filter(
+    return _decode_lookup(spark, snap, files, schema_ddl, comps,
+                          parts).filter(
         reduce(and_, [F.col(c) == v for c, v in zip(cols, vals)]))
-    from .deletes import apply_deletes  # tombstoned keys stay suppressed
-
-    return apply_deletes(spark, out, snap)
 
 
 def range_lookup(spark: SparkSession, tbl: ManifestTable,
                  lower, upper, schema_ddl: str | None = None,
                  key: str = "url") -> DataFrame:
-    """Key-RANGE query against an encoded table (``lower <= key <=
-    upper``), the scan sibling of :func:`point_lookup`: part pruning
-    does not apply (a key range spans arbitrary parts), but the
-    manifest's per-file key ranges prune FILES with zero I/O on
-    key-clustered tables, block min/max stats then skip whole block
-    groups, and the residual row filter runs after decode — the same
-    three-tier shape as parquet row-group skipping, one level up.
-    Files without recorded ranges are conservatively read."""
-    from .encode import decode_blocks_df, prune_block_groups
-
+    """Key-RANGE query (``lower <= key <= upper``), the scan sibling of
+    :func:`point_lookup`: no part tier (a range spans arbitrary parts);
+    manifest per-file key ranges prune files on the driver (files
+    without a range are kept), then the same per-file kernel skips
+    block groups on key min/max and decodes the rest; the exact range
+    filter runs last, as a Spark filter."""
     snap = tbl.current()
     if schema_ddl is None:
         schema_ddl = tbl.row_schema(snap)
@@ -964,29 +893,98 @@ def range_lookup(spark: SparkSession, tbl: ManifestTable,
     # ``key`` is ONE column — on composite-keyed tables pass any
     # component (ranges are recorded per component); _component_key_ranges
     # resolves it across single-key runs, composite runs, and compaction
-    aliases = _key_aliases(snap, key)
-    names = {key} | aliases
-    key_ranges = _component_key_ranges(snap, names)
-    fam = "s" if isinstance(lower, str) else "i"
-    files = []
-    for f in snap.files:
-        rng = key_ranges.get(os.path.basename(f), {}).get(fam)
-        if rng is None or (rng[0] <= upper and lower <= rng[1]):
-            files.append(f)
-    files = files or snap.files[:1]  # empty parquet read is invalid
-    blocks = _relabel_blocks(
-        spark.read.option("mergeSchema", "true").parquet(*files),
-        aliases, key)
-    if fam == "s":
-        blocks = prune_block_groups(blocks, key, lower_s=lower,
-                                    upper_s=upper)
-    else:
-        blocks = prune_block_groups(blocks, key, lower=lower, upper=upper)
-    out = decode_blocks_df(blocks, schema_ddl).filter(
+    names = {key} | _key_aliases(snap, key)
+    files = _files_in_range(snap, snap.files, names, lower, upper)
+    return _decode_lookup(spark, snap, files, schema_ddl,
+                          [(names, lower, upper, None)], None).filter(
         (F.col(key) >= lower) & (F.col(key) <= upper))
-    from .deletes import apply_deletes  # tombstoned keys stay suppressed
 
-    return apply_deletes(spark, out, snap)
+
+#: block-row columns the lookup kernel reads to pick block groups
+_GROUP_SELECT_COLS = ["part_id", "parts", "block_seq", "writer_uid", "col",
+                      "min_i", "max_i", "min_s", "max_s", "key_bloom"]
+
+
+def _select_groups(path: str, comps: list, parts: set[int] | None) -> set:
+    """Block groups (part_id, block_seq, writer_uid) of ONE file that may
+    hold the probe, read from the key components' block rows only.
+    ``comps`` holds one (names, lo, hi, bloom probe or None) per key
+    component; ``parts`` (None: any) must overlap a row's exact part
+    membership. Same rules as ``encode.prune_block_groups`` and
+    ``prune_block_groups_bloom``: a NULL stat or bloom, or a column the
+    file predates, keeps the group; a group missing a component's row
+    is dropped."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from .encode import bloom_hits, bloom_words
+
+    have = set(pq.read_schema(path).names)
+    t = pq.read_table(
+        path, columns=[c for c in _GROUP_SELECT_COLS if c in have],
+        filters=[("col", "in", sorted(set().union(*(c[0] for c in comps))))],
+        use_threads=False)
+    py = {c: t.column(c).to_pylist() for c in t.column_names
+          if c != "key_bloom"}
+    gids = list(zip(py["part_id"], py["block_seq"], py["writer_uid"]))
+    ok = np.array([parts is None or not parts.isdisjoint(
+        (g[0],) if m is None else m)  # pre-banding rows: [part_id]
+        for g, m in zip(gids, py.get("parts", [None] * len(gids)))], bool)
+    survivors = None
+    for names, lo, hi, probe in comps:
+        keep = ok & np.array([c in names for c in py["col"]], bool)
+        fam = ("s" if isinstance(lo, str) else
+               "i" if type(lo) is int and type(hi) is int else None)
+        if fam and f"min_{fam}" in py:
+            keep &= np.array([(a is None or a <= hi) and (b is None or b >= lo)
+                              for a, b in zip(py[f"min_{fam}"],
+                                              py[f"max_{fam}"])], bool)
+        if probe is not None and "key_bloom" in have:
+            keep &= bloom_hits(bloom_words(t.column("key_bloom")), probe)
+        found = {g for g, k in zip(gids, keep) if k}
+        survivors = found if survivors is None else survivors & found
+    return survivors
+
+
+def _decode_lookup(spark: SparkSession, snap, files: list[str],
+                   schema_ddl: str, comps: list,
+                   parts: set[int] | None) -> DataFrame:
+    """The lookups' decode stage: zero-shuffle Python tasks over file
+    slices (``spark.range(n).mapInArrow``). Per file, the task picks the
+    surviving block groups (:func:`_select_groups`), decodes only those
+    through ``encode.decode_file_batches`` (CRCs verified, renames and
+    widenings resolved as in ``read_decoded``) and drops tombstoned
+    rows; a file with no surviving group is never read past its key
+    rows. The caller applies the exact residual filter."""
+    from pyspark.sql.types import StructType
+
+    from .encode import decode_file_batches
+    from .sources.eel_datasource import (_decode_context, _filter_tombstones,
+                                         _load_tombstone_keys,
+                                         _tombstone_specs)
+
+    col_order, arrow_types, alias_of = _decode_context(
+        snap, StructType.fromDDL(schema_ddl))
+    tombstones = _tombstone_specs(snap)
+    n = max(1, min(len(files), spark.sparkContext.defaultParallelism * 2))
+
+    def _kernel(batches):
+        loaded = _load_tombstone_keys(tombstones)
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                for path in files[i::n]:
+                    groups = _select_groups(path, comps, parts)
+                    if not groups:
+                        continue
+                    for out in decode_file_batches(
+                            path, col_order, arrow_types, alias_of, True,
+                            groups=groups):
+                        if loaded:
+                            out = _filter_tombstones(out, loaded)
+                        if out.num_rows:
+                            yield out
+
+    return spark.range(n, numPartitions=n).mapInArrow(_kernel, schema_ddl)
 
 
 def compact_coverage(parts: list[int]) -> "list[int] | dict":

@@ -317,6 +317,37 @@ def bloom_may_contain(key_value) -> "F.Column":
     return F.col("key_bloom").isNull() | F.expr(" AND ".join(tests))
 
 
+def bloom_words(arr) -> tuple:
+    """(offsets, uint64 words, null mask) of a ``key_bloom`` list array
+    — the decoded form :func:`bloom_hits` probes; cacheable across
+    probes of the same blooms."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    offsets = arr.offsets.to_numpy().astype(np.int64)
+    values = arr.values.to_numpy(zero_copy_only=False) \
+        .astype(np.int64).view(np.uint64)
+    return offsets, values, np.asarray(arr.is_null())
+
+
+def bloom_hits(words: tuple, key_value) -> "np.ndarray":
+    """Per-cell :func:`bloom_may_contain` in numpy over
+    :func:`bloom_words` output, bit-identical to the Column expression;
+    NULL and empty blooms are a hit (conservative)."""
+    offsets, values, nulls = words
+    sizes = offsets[1:] - offsets[:-1]
+    m = np.maximum(sizes * 64, 1)
+    valid = (~nulls) & (sizes > 0)
+    h1, h2 = bloom_probe_seeds(key_value)
+    hit = np.ones(len(sizes), dtype=bool)
+    for i in range(BLOOM_K if values.size else 0):
+        p = (h1 + i * h2) % m
+        widx = np.clip(offsets[:-1] + (p >> 6), 0, len(values) - 1)
+        bits = ((values[widx] >> (p & 63).astype(np.uint64))
+                & np.uint64(1)).astype(bool)
+        hit &= np.where(valid, bits, True)
+    return hit
+
+
 def _block_stats(arr: pa.Array, kind: str):
     """(min_i, max_i, min_s, max_s) for the block header row — the engine's
     analogue of parquet row-group / ORC stripe statistics that the
@@ -1057,16 +1088,21 @@ def decode_blocks_df(blocks: DataFrame, schema_ddl: str,
 
 def decode_file_batches(path: str, col_order: list[str],
                         arrow_types: dict, alias_of: dict[str, str],
-                        verify: bool) -> Iterator[pa.RecordBatch]:
+                        verify: bool,
+                        groups: set[tuple] | None = None,
+                        ) -> Iterator[pa.RecordBatch]:
     """Decode ONE encoded block file into output RecordBatches — pure
     pyarrow/numpy, no SparkSession. This is the executor-side unit of
     ``decode_files_df`` (whole files per task — block groups are
-    file-adjacent by construction) and of the Python DataSource read
-    path (sources/eel_datasource.py), so both read surfaces share one
-    kernel. ``alias_of`` maps historical column names (rename_column)
-    to current ones; ``arrow_types`` carries the CURRENT (possibly
-    widened) target type per column — narrow pre-widen blocks are
-    safe-cast up."""
+    file-adjacent by construction), of the Python DataSource read path
+    (sources/eel_datasource.py) and of the lookup kernel
+    (checkpoint.point_lookup / range_lookup), so every read surface
+    shares one kernel. ``alias_of`` maps historical column names
+    (rename_column) to current ones; ``arrow_types`` carries the
+    CURRENT (possibly widened) target type per column — narrow
+    pre-widen blocks are safe-cast up. ``groups`` selects block groups
+    by (part_id, block_seq, writer_uid): other groups are skipped
+    before their CRC check and decode."""
     import pyarrow.parquet as pq
 
     n_cols = len(col_order)
@@ -1095,6 +1131,8 @@ def decode_file_batches(path: str, col_order: list[str],
         for i, (part, seq, uid, name) in enumerate(keys):
             name = alias_of.get(name, name)
             key = (part, seq, uid)
+            if groups is not None and key not in groups:
+                continue
             group = pending.setdefault(key, {})
             hdr = headers[i].as_py()
             buf = payloads[i].as_buffer()

@@ -992,7 +992,16 @@ def semantic_dedup(emb: DataFrame, id_col: str, vec_col: str,
         den = math.sqrt(na) * math.sqrt(nb)
         return d / den if den > 0 else 0.0
 
+    dim = cents.shape[1]
+
     def _dominated(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        # NULL or off-dimension vectors are never dominated and dominate
+        # nothing: the JVM cosine fold over them is NULL, and a NULL
+        # comparison is false
+        pdf = pdf[pdf[vec_col].map(lambda v: v is not None
+                                   and len(v) == dim)]
+        if pdf.empty:
+            return pdf[[id_col]]
         ids = pdf[id_col].to_numpy()
         order = np.argsort(ids, kind="stable")
         ids_s = ids[order]

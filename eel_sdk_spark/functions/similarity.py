@@ -89,11 +89,16 @@ def _lite_centroids(emb: DataFrame, vec_col: str, n_list: int) -> np.ndarray:
     most n_list centroids — fewer when the table is smaller than n_list;
     empty array for an empty table (callers fall back to brute force)."""
     sample_rows = (emb.select(vec_col)
+                   .filter(F.col(vec_col).isNotNull())
                    .orderBy(F.xxhash64(F.col(vec_col)))
                    .limit(n_list * 32).collect())
     if not sample_rows:
         return np.empty((0, 0))
-    sample = np.array([list(r[0]) for r in sample_rows], dtype=np.float64)
+    # ragged input: sample only vectors of the most common length
+    lens = [len(r[0]) for r in sample_rows]
+    dim = max(set(lens), key=lens.count)
+    sample = np.array([list(r[0]) for r in sample_rows if len(r[0]) == dim],
+                      dtype=np.float64)
     n_list = min(n_list, len(sample))
     seeds = sample[:n_list]
     # one Lloyd step on the sample

@@ -288,6 +288,24 @@ def test_semantic_dedup(spark, emb):
     assert kept == 3000
 
 
+def test_semantic_dedup_keeps_null_and_ragged_vectors(spark):
+    """A NULL or off-dimension vector must not crash the job: such rows
+    pass through as not dominated (their cosine is NULL, and a NULL
+    comparison is false), while real duplicates still collapse."""
+    import numpy as np
+
+    from eel_sdk_spark.functions.dedup import semantic_dedup
+
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)])
+            for i in range(60)]
+    rows += [(100, rows[0][1]), (200, None), (201, [1.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    kept = {r["vec_id"] for r in semantic_dedup(
+        emb, "vec_id", "embedding", threshold=0.9999, n_list=4).collect()}
+    assert kept == set(range(60)) | {200, 201}
+
+
 def test_assign_cells_matmul_matches_expr(spark, emb):
     """The broadcast-matmul assignment (the large-n_list path) must agree
     with the codegen expression tree vector-for-vector — same argmax, same
